@@ -147,6 +147,9 @@ object IvfPqResidual {
       // Column filter: pushdown, not a full-corpus deserializing lambda
       val seeds = ds.filter(col("vec_id") < k).collect().sortBy(_.vec_id)
       val cents0 = seeds.map(x => Cent(x.vec_id, x.v.toArray, x.n2))
+      // no seed vectors, no cells and no codebook: no query has a candidate
+      if (cents0.isEmpty)
+        return Seq.empty[(Long, Int, Long, Long)].toDF("q_id", "rk", "vec_id", "score_q")
 
       // ---- pass A: one Lloyd step → cents1 (skipped for the pure-PQ
       // ADC shape, which has no coarse stage) ----
@@ -237,6 +240,7 @@ object IvfPqResidual {
       val mergedB = new Array[Long](m * nC0 + m * nC0 * sub)
       pb.foreach { p =>
         var i = 0
+        // addExact on purpose: an overflowing sum fails fast instead of wrapping into a wrong mean
         while (i < p.length) { mergedB(i) = Math.addExact(mergedB(i), p(i)); i += 1 }
       }
       val cb1: Array[Array[Code]] = Array.tabulate(m) { mm =>

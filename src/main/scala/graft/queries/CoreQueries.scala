@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.functions.Reducers
@@ -22,6 +22,69 @@ object CoreQueries {
     */
   private def evKeyed(s: SparkSession, dir: String): KStream =
     KStream(Q.events(s, dir), Seq("user_id"))
+
+  /** A slice fold's sink as the catalog's (user_id, id, n, sum_value)
+    * buckets.
+    */
+  private[queries] def sliceBuckets(sink: DataFrame, id: String = "window_id"): DataFrame =
+    sink.select(col("k").cast("long").as("user_id"), col("windowId").as(id), col("n"),
+        col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
+      .orderBy("user_id", id)
+
+  /** stream_zip_join / stream_take_join: purchases (side 1) and clicks
+    * (side 0) through `join`, as (user_id, ts, p_val, c_val).
+    */
+  private def zipJoined(s: SparkSession, dir: String, name: String,
+      join: Dataset[graft.streaming.ZipEvent] => Dataset[graft.streaming.ZipOut]): DataFrame = {
+    import s.implicits._
+    val src = StreamHarness.keyed(
+        StreamHarness.events(s, dir).filter(col("event_type").isin("purchase", "click")),
+        when(col("event_type") === "purchase", 1).otherwise(0).as("side"))
+      .as[graft.streaming.ZipEvent]
+    StreamHarness.run(s, name, join(src))
+      .select(col("k").cast("long").as("user_id"), col("ts"),
+        col("left").as("p_val"), col("right").as("c_val"))
+      .orderBy("user_id", "ts")
+  }
+
+  /** stream_stream_join / stream_outer_join: each purchase with every
+    * click of the same user in the preceding hour, as a `joinType`
+    * stream-stream join under 0-second watermarks.
+    */
+  private def rangeJoined(s: SparkSession, dir: String, name: String,
+      joinType: String): DataFrame = {
+    def side(tpe: String, pfx: String) =
+      StreamHarness.events(s, dir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_uid"),
+          col("event_id").as(s"${pfx}_id"),
+          col("value").as(s"${pfx}_val"),
+          timestamp_micros(col("ts")).as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "0 seconds")
+    val joined = side("purchase", "p").join(side("click", "c"),
+      expr("""p_uid = c_uid AND
+              c_time BETWEEN p_time - INTERVAL 1 HOUR AND p_time"""),
+      joinType)
+    StreamHarness.run(s, name,
+        joined.select(col("p_id"), col("c_id"), col("p_val"), col("c_val")),
+        availableNow = true)
+      .orderBy("p_id", "c_id")
+  }
+
+  /** The CEP twins' feed: the events halves (batch 1 the old half,
+    * batch 2 the recent half) as CepEvents of `kind`, rows of other
+    * `types` dropped, through `op`.
+    */
+  private def cepFed(s: SparkSession, dir: String, name: String, kind: Column,
+      types: String*)(op: Dataset[graft.streaming.CepEvent] => Dataset[_]): DataFrame = {
+    import s.implicits._
+    StreamHarness.fed(s, name,
+        StreamHarness.batches(StreamFixtures.eventsHalves(s, dir), "lo", "hi")) { src =>
+      op(src.filter(col("event_type").isin(types: _*))
+        .select(col("user_id").cast("string").as("k"), col("ts"), col("seq"), kind.as("kind"))
+        .as[graft.streaming.CepEvent])
+    }
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -360,23 +423,11 @@ object CoreQueries {
     QueryDef(
       "stream_tumbling",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        // the file stream source wants a directory: glob the one table file
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .withColumn("ts", graft.core.Tables.tsUsExpr(schema))
         val agg = graft.streaming.Streams.tumblingAgg(
-          src, Seq("user_id"), "1 day", "0 seconds",
+          StreamHarness.events(s, dir), Seq("user_id"), "1 day", "0 seconds",
           "n" -> count(lit(1)),
           "sum_value" -> Q.dsumD(col("value")))
-        val name = "stream_tumbling_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name)
+        StreamHarness.run(s, "stream_tumbling", agg, "complete", availableNow = true)
           .select(col("user_id"),
             unix_micros(col("window.start")).as("wstart"),
             col("n"), col("sum_value"))
@@ -396,21 +447,18 @@ object CoreQueries {
     QueryDef(
       "stream_sliding",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // keyed-topic ingest shape (VERDICT r14 #3, same playbook that
         // took stream_session_window 6.48→3.96 s at sf1): the corpus
         // arrives as ~cores parquet files hash-partitioned by user_id
         // and the scan takes one partition per file — the 5M-row sf1
         // decode runs file-parallel instead of on one core. A deployed
         // Kafka topic is keyed, so this is the production ingest shape.
-        val fxRoot = StreamFixtures.eventsKeyed(s, dir)
-        val schema = StreamFixtures.eventsKeyedSchema(s, dir)
-        val srcDir = StreamFixtures.scratchDir("graft_sl_src_")
-        val (name, wm) = try {
-          StreamFixtures.feed(fxRoot, "keyed", srcDir)
-          StreamHarness.withSplitPerFile(s) {
-            val src = s.readStream.schema(schema).parquet(srcDir)
-              .withColumn("ts", graft.core.Tables.tsUsExpr(schema))
+        var wm = 0L
+        val sink = StreamHarness.withSplitPerFile(s) {
+          StreamHarness.fed(s, "stream_sliding",
+              StreamHarness.batches(StreamFixtures.eventsKeyed(s, dir), "keyed"),
+              availableNow = true,
+              check = q => wm = graft.streaming.SlicedHopping.finalWatermarkUs(q)) { src =>
             // SLICED form (streaming.SlicedHopping): the direct
             // window(2h, 1h) built-in expands every event to width/step
             // state rows BEFORE the state store; slicing aggregates once
@@ -418,22 +466,12 @@ object CoreQueries {
             // state and shuffle) and composes hops from the slice-sized
             // sink with the query's own final watermark — ≡ the direct
             // form's append emission (law-tested at factors 2 and 10).
-            val agg = graft.streaming.SlicedHopping.slices(
+            graft.streaming.SlicedHopping.slices(
               src, Seq("user_id"), "1 hour", "0 seconds",
               "n" -> count(lit(1)), "sv" -> Q.dsum(col("value")))
-            val nm = "stream_sliding_" + System.nanoTime()
-            val q = agg.writeStream.queryName(nm).format("memory")
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val w = try {
-              q.processAllAvailable()
-              graft.streaming.SlicedHopping.finalWatermarkUs(q)
-            } finally q.stop()
-            (nm, w)
           }
-        } finally StreamFixtures.deleteRecursively(srcDir)
-        graft.streaming.SlicedHopping.compose(s.table(name), Seq("user_id"),
+        }
+        graft.streaming.SlicedHopping.compose(sink, Seq("user_id"),
             7200000000L, 3600000000L, wm,
             "n" -> sum(col("n")),
             "sum_value" -> sum(col("sv")).cast("double"))
@@ -466,23 +504,9 @@ object CoreQueries {
         // table flows through readStream — nothing is ever materialized on
         // the driver (the round-1 collect()+MemoryStream harness was a
         // driver OOM at scale, VERDICT r1 "What's wrong" #3).
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .select(col("user_id").cast("string").as("k"),
-            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-            col("value").as("v"))
+        val src = StreamHarness.keyed(StreamHarness.events(s, dir))
           .as[graft.streaming.KeyedEvent]
-        val name = "stream_cs_" + System.nanoTime()
-        val sq = graft.streaming.CountSlices(src, 10)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
-          .select(col("k").cast("long").as("user_id"),
-            col("windowId").as("window_id"), col("n"),
-            col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
-          .orderBy("user_id", "window_id")
+        sliceBuckets(StreamHarness.run(s, "stream_cs", graft.streaming.CountSlices(src, 10)))
       },
       Some("""SELECT user_id, window_id, n, sum_value FROM (
                SELECT user_id, window_id, count(*) AS n,
@@ -512,13 +536,11 @@ object CoreQueries {
         // the timed run measures the two streaming incarnations, not
         // fixture parquet IO (VERDICT r2 "What's wrong" #2).
         val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
+        val schema = Tables.cachedSchema(s, s"$fx/lo")
         val root = StreamFixtures.scratchDir("graft_resume_")
         val srcDir = s"$root/src"
         def incarnation(): Unit = {
-          val in = s.readStream.schema(schema).parquet(srcDir)
-            .select(col("user_id").cast("string").as("k"), col("ts"),
-              col("seq"), col("value").as("v"))
+          val in = StreamHarness.keyed(s.readStream.schema(schema).parquet(srcDir))
             .as[graft.streaming.KeyedEvent]
           val q = graft.streaming.CountSlices(in, 10)
             .writeStream.format("parquet")
@@ -529,11 +551,7 @@ object CoreQueries {
         }
         StreamFixtures.feed(fx, "lo", srcDir); incarnation() // partials parked in state
         StreamFixtures.feed(fx, "hi", srcDir); incarnation() // state restored; straddlers close
-        val res = s.read.parquet(s"$root/out")
-          .select(col("k").cast("long").as("user_id"),
-            col("windowId").as("window_id"), col("n"),
-            col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
-          .orderBy("user_id", "window_id")
+        val res = sliceBuckets(s.read.parquet(s"$root/out"))
           .localCheckpoint(true) // materialize before the scratch dir is deleted
         StreamFixtures.deleteRecursively(root)
         res
@@ -559,35 +577,20 @@ object CoreQueries {
     QueryDef(
       "stream_late_drop",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        // Memoized pre-split halves (StreamFixtures): the RECENT half (hi)
-        // is fed first to drive the watermark, then the old half (lo)
-        // arrives entirely behind it.
-        val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_late_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "hi", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(col("user_id"), col("ts"), col("value"))
-        val agg = graft.streaming.Streams.tumblingAgg(
-          src, Seq("user_id"), "1 day", "1 hour",
-          "n" -> count(lit(1)),
-          "sum_value" -> Q.dsumD(col("value")))
-        val name = "stream_late_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: recent half; wm → max−1h
-          StreamFixtures.feed(fx, "lo", srcDir)
-          StreamHarness.settle(q) // batch 2: old half — all late, dropped
-        } finally q.stop()
-        val res = s.table(name)
-          .select(col("user_id"),
+        // Memoized pre-split halves (StreamFixtures): batch 1 is the
+        // RECENT half (hi), which drives the watermark to max−1h; batch 2
+        // is the old half (lo), entirely behind it — late, dropped.
+        StreamHarness.fed(s, "stream_late",
+            StreamHarness.batches(StreamFixtures.eventsHalves(s, dir), "hi", "lo")) { src =>
+          graft.streaming.Streams.tumblingAgg(
+            src.select(col("user_id"), col("ts"), col("value")),
+            Seq("user_id"), "1 day", "1 hour",
+            "n" -> count(lit(1)),
+            "sum_value" -> Q.dsumD(col("value")))
+        }.select(col("user_id"),
             unix_micros(col("window.start")).as("wstart"),
             col("n"), col("sum_value"))
           .orderBy("user_id", "wstart")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH b AS (SELECT min(epoch_us(ts)) AS tmin, max(epoch_us(ts)) AS tmax
                           FROM events)
@@ -610,24 +613,10 @@ object CoreQueries {
       "stream_trigger_slices",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .select(col("user_id").cast("string").as("k"),
-            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-            col("value").as("v"),
+        val src = StreamHarness.keyed(StreamHarness.events(s, dir),
             (col("event_type") === "error").as("gate"))
           .as[graft.streaming.GatedEvent]
-        val name = "stream_ts_" + System.nanoTime()
-        val sq = graft.streaming.TriggerSlices.tagged(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
-          .select(col("k").cast("long").as("user_id"),
-            col("windowId").as("window_id"), col("n"),
-            col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
-          .orderBy("user_id", "window_id")
+        sliceBuckets(StreamHarness.run(s, "stream_ts", graft.streaming.TriggerSlices.tagged(src)))
       },
       Some("""SELECT user_id, window_id, n, sum_value FROM (
                SELECT user_id, window_id, count(*) AS n,
@@ -650,23 +639,11 @@ object CoreQueries {
       "stream_gated_windows",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .select(col("user_id").cast("string").as("k"),
-            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-            col("value").as("v"), (col("value") >= 50).as("gate"))
+        val src = StreamHarness.keyed(StreamHarness.events(s, dir),
+            (col("value") >= 50).as("gate"))
           .as[graft.streaming.GatedEvent]
-        val name = "stream_gw_" + System.nanoTime()
-        val sq = graft.streaming.GatedWindows(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
-          .select(col("k").cast("long").as("user_id"),
-            col("windowId").as("session_id"), col("n"),
-            col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
-          .orderBy("user_id", "session_id")
+        sliceBuckets(StreamHarness.run(s, "stream_gw", graft.streaming.GatedWindows(src)),
+          "session_id")
       },
       Some("""WITH base AS (
                SELECT *, sum(CASE WHEN g AND NOT coalesce(pg, false) THEN 1 ELSE 0 END)
@@ -693,25 +670,7 @@ object CoreQueries {
     QueryDef(
       "stream_zip_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .filter(col("event_type").isin("purchase", "click"))
-          .select(col("user_id").cast("string").as("k"),
-            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-            when(col("event_type") === "purchase", 1).otherwise(0).as("side"),
-            col("value").as("v"))
-          .as[graft.streaming.ZipEvent]
-        val name = "stream_zj_" + System.nanoTime()
-        val sq = graft.streaming.ZipJoin(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
-          .select(col("k").cast("long").as("user_id"), col("ts"),
-            col("left").as("p_val"), col("right").as("c_val"))
-          .orderBy("user_id", "ts")
+        zipJoined(s, dir, "stream_zj", graft.streaming.ZipJoin(_))
       },
       Some("""WITH u AS (
                SELECT user_id, epoch_us(ts) AS ts, event_id, 1 AS side,
@@ -739,25 +698,7 @@ object CoreQueries {
     QueryDef(
       "stream_take_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .filter(col("event_type").isin("purchase", "click"))
-          .select(col("user_id").cast("string").as("k"),
-            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-            when(col("event_type") === "purchase", 1).otherwise(0).as("side"),
-            col("value").as("v"))
-          .as[graft.streaming.ZipEvent]
-        val name = "stream_tj_" + System.nanoTime()
-        val sq = graft.streaming.TakeJoin(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
-          .select(col("k").cast("long").as("user_id"), col("ts"),
-            col("left").as("p_val"), col("right").as("c_val"))
-          .orderBy("user_id", "ts")
+        zipJoined(s, dir, "stream_tj", graft.streaming.TakeJoin(_))
       },
       Some("""WITH u AS (
                SELECT user_id, epoch_us(ts) AS ts, event_id, 1 AS side,
@@ -791,28 +732,19 @@ object CoreQueries {
       "stream_ewma",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         try {
-          val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-          val src = s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir)
-            .select(col("user_id").cast("string").as("k"),
-              graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-              col("value").as("v"))
+          val src = StreamHarness.keyed(StreamHarness.events(s, dir))
             .as[graft.streaming.KeyedEvent]
-          val name = "stream_ew_" + System.nanoTime()
-          val sq = graft.streaming.EwmaScan(src, 0.25)
-            .writeStream.queryName(name).format("memory").outputMode("append").start()
-          try sq.processAllAvailable() finally sq.stop()
+          val sink = StreamHarness.run(s, "stream_ew", graft.streaming.EwmaScan(src, 0.25))
           // packed emission (VERDICT r12 #4): the sink holds ~|keys|
           // array rows per micro-batch; exploded() recovers the
           // row-for-row per-event contract in batch land, and the
           // terminal value per key is a partial-agg max_by (map-side
           // combine, no full-sort window) instead of a 5M-row
           // row_number shuffle
-          graft.streaming.EwmaScan.exploded(s.table(name))
+          graft.streaming.EwmaScan.exploded(sink)
             .groupBy(col("k"))
             .agg(max_by(col("ewma"), struct(col("ts"), col("seq"))).as("ewma"))
             .select(col("k").cast("long").as("user_id"), col("ewma"))
@@ -832,28 +764,7 @@ object CoreQueries {
     QueryDef(
       "stream_stream_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        def side(tpe: String, pfx: String) =
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir)
-            .filter(col("event_type") === tpe)
-            .select(col("user_id").as(s"${pfx}_uid"),
-              col("event_id").as(s"${pfx}_id"),
-              col("value").as(s"${pfx}_val"),
-              timestamp_micros(graft.core.Tables.tsUsExpr(schema)).as(s"${pfx}_time"))
-            .withWatermark(s"${pfx}_time", "0 seconds")
-        val joined = side("purchase", "p").join(side("click", "c"),
-          expr("""p_uid = c_uid AND
-                  c_time BETWEEN p_time - INTERVAL 1 HOUR AND p_time"""))
-        val name = "stream_ssj_" + System.nanoTime()
-        val sq = joined
-          .select(col("p_id"), col("c_id"), col("p_val"), col("c_val"))
-          .writeStream.queryName(name).format("memory").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("p_id", "c_id")
+        rangeJoined(s, dir, "stream_ssj", "inner")
       },
       Some("""SELECT p.event_id AS p_id, c.event_id AS c_id,
              p.value AS p_val, c.value AS c_val
@@ -883,29 +794,7 @@ object CoreQueries {
     QueryDef(
       "stream_outer_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        def side(tpe: String, pfx: String) =
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir)
-            .filter(col("event_type") === tpe)
-            .select(col("user_id").as(s"${pfx}_uid"),
-              col("event_id").as(s"${pfx}_id"),
-              col("value").as(s"${pfx}_val"),
-              timestamp_micros(graft.core.Tables.tsUsExpr(schema)).as(s"${pfx}_time"))
-            .withWatermark(s"${pfx}_time", "0 seconds")
-        val joined = side("purchase", "p").join(side("click", "c"),
-          expr("""p_uid = c_uid AND
-                  c_time BETWEEN p_time - INTERVAL 1 HOUR AND p_time"""),
-          "left_outer")
-        val name = "stream_soj_" + System.nanoTime()
-        val sq = joined
-          .select(col("p_id"), col("c_id"), col("p_val"), col("c_val"))
-          .writeStream.queryName(name).format("memory").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("p_id", "c_id")
+        rangeJoined(s, dir, "stream_soj", "left_outer")
       },
       Some("""WITH p AS (SELECT * FROM events WHERE event_type='purchase'),
                   c AS (SELECT * FROM events WHERE event_type='click'),
@@ -934,12 +823,9 @@ object CoreQueries {
     QueryDef(
       "stream_bind_bucket",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val src = StreamHarness.events(s, dir)
           .filter(col("event_type").isin("purchase", "click"))
-          .select(col("user_id"), graft.core.Tables.tsUsExpr(schema).as("ts"),
+          .select(col("user_id"), col("ts"),
             col("event_type").as("tag"), col("value").as("v"))
         val agg = graft.streaming.Streams.tumblingAgg(
           src, Seq("user_id"), "1 day", "0 seconds",
@@ -947,13 +833,7 @@ object CoreQueries {
           "sum_p" -> coalesce(Q.dsum(when(col("tag") === "purchase", col("v"))),
             lit(0).cast("decimal(38,6)")).cast("double"),
           "n_c" -> count(when(col("tag") === "click", 1)))
-        val name = "stream_bb_" + System.nanoTime()
-        val sq = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.run(s, "stream_bb", agg, "complete", availableNow = true)
           .select(col("user_id"),
             expr("unix_micros(window.start) div 86400000000").as("window_id"),
             col("n_p"), col("sum_p"), col("n_c"))
@@ -1273,7 +1153,6 @@ object CoreQueries {
     QueryDef(
       "stream_session_window",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // pre-merge sessions within each input partition BEFORE the
         // key shuffle: the shuffle then moves ~sessions (~912k at sf1),
         // not ~events (5M) — the quantity that matters on a real
@@ -1292,7 +1171,6 @@ object CoreQueries {
             "spark.sql.streaming.noDataMicroBatches.enabled=true: append-" +
             "mode sessions finalize in the idle batch after the flush " +
             "sentinel's watermark advance")
-        val mainSrc = StreamFixtures.scratchDir("graft_sw_src_")
         try {
           // keyed-topic ingest shape (VERDICT r13 #3): the corpus arrives
           // as ~cores parquet files hash-partitioned by user_id, and the
@@ -1305,55 +1183,37 @@ object CoreQueries {
           // the single-split decode AND an extra 5M-row exchange); a
           // deployed Kafka topic is keyed, so this is the shape the
           // operator actually sees in production.
-          val fxRoot = StreamFixtures.eventsKeyed(s, dir)
-          val schema = StreamFixtures.eventsKeyedSchema(s, dir)
-          StreamFixtures.feed(fxRoot, "keyed", mainSrc)
-          // the sentinel file is staged into the SAME source dir BEFORE
-          // start, so batch 0 admits the corpus and the flush row
-          // TOGETHER: the watermark only advances AFTER a batch, so
-          // nothing can be late-dropped, and the single no-data batch
-          // that follows finalizes and emits every real session and
-          // drains the store in one pass. (r12 needed a second source to
-          // stage the sentinel after batch 0; the r13 single-phase feed
-          // made that source pure overhead — one more listing + offset
-          // log + union node per trigger — so it is gone.)
-          StreamFixtures.feed(
-            StreamFixtures.sessionFlushFixture(s, dir), "flush", mainSrc)
-          val src = s.readStream.schema(schema).parquet(mainSrc)
-            .withColumn("event_time", timestamp_micros(graft.core.Tables.tsUsExpr(schema)))
-            .withWatermark("event_time", "0 seconds")
-          val agg = src
-            .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
-            .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
-          val name = "stream_sw_" + System.nanoTime()
+          //
+          // The sentinel file is staged in the SAME first batch as the
+          // corpus: the watermark only advances AFTER a batch, so nothing
+          // can be late-dropped, and the single no-data batch that
+          // follows finalizes and emits every real session and drains
+          // the store in one pass.
+          val corpus = Seq(StreamFixtures.eventsKeyed(s, dir) -> "keyed",
+            StreamFixtures.sessionFlushFixture(s, dir) -> "flush")
           StreamHarness.withSplitPerFile(s) {
-          val sq = agg.writeStream.queryName(name).format("memory")
-            .outputMode("append")
-            .start()
-          try {
-            StreamHarness.settle(sq)
-            // the sentinel rides WITH the corpus in batch 0, so nothing
-            // may ever be late-dropped; if admission ever spans batches
-            // (fixture/source drift) this catches the silent loss
-            // (ADVICE r13, same spirit as the noDataMicroBatches guard)
-            val dropped = StreamHarness.watermarkDrops(sq)
-            require(dropped == 0L,
-              s"stream_session_window: $dropped rows late-dropped by the " +
-                "watermark — corpus and flush sentinel were not admitted " +
-                "in the same micro-batch; sessions were silently lost")
-          } finally sq.stop()
-          }
-          s.table(name)
-            .filter(col("user_id") =!= -1L)
+            StreamHarness.fed(s, "stream_sw", Seq(corpus), check = q => {
+              // if admission ever spans batches (fixture/source drift)
+              // this catches the silent loss (ADVICE r13, same spirit as
+              // the noDataMicroBatches guard)
+              val dropped = StreamHarness.watermarkDrops(q)
+              require(dropped == 0L,
+                s"stream_session_window: $dropped rows late-dropped by the " +
+                  "watermark — corpus and flush sentinel were not admitted " +
+                  "in the same micro-batch; sessions were silently lost")
+            }) { src =>
+              src.withColumn("event_time", timestamp_micros(col("ts")))
+                .withWatermark("event_time", "0 seconds")
+                .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
+                .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
+            }
+          }.filter(col("user_id") =!= -1L)
             .select(col("user_id"),
               unix_micros(col("session_window.start")).as("wstart"),
               col("n"), col("sum_value"))
             .orderBy("user_id", "wstart")
-        } finally {
-          s.conf.unset(
-            "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
-          StreamFixtures.deleteRecursively(mainSrc)
-        }
+        } finally s.conf.unset(
+          "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
       },
       Some("""SELECT user_id, min(t) AS wstart, count(*) AS n,
              sum(value::decimal(38,6))::double AS sum_value
@@ -1382,27 +1242,16 @@ object CoreQueries {
     QueryDef(
       "stream_ingest_floor",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val fxRoot = StreamFixtures.eventsKeyed(s, dir)
-        val schema = StreamFixtures.eventsKeyedSchema(s, dir)
-        val srcDir = StreamFixtures.scratchDir("graft_floor_src_")
-        try {
-          StreamFixtures.feed(fxRoot, "keyed", srcDir)
-          // this query sinks EVERY event row to the driver-side memory
-          // sink — fail loud on an undersized maxResultSize (ADVICE r14)
-          StreamFixtures.assertDriverCollectCapacity(s, srcDir,
-            "stream_ingest_floor")
-          val name = "stream_floor_" + System.nanoTime()
-          StreamHarness.withSplitPerFile(s) {
-            val src = s.readStream.schema(schema).parquet(srcDir)
-              .select(col("event_id"), col("user_id"), col("value"))
-            val sq = src.writeStream.queryName(name).format("memory")
-              .outputMode("append")
-              .start()
-            try StreamHarness.settle(sq) finally sq.stop()
+        val fx = StreamFixtures.eventsKeyed(s, dir)
+        // this query sinks EVERY event row to the driver-side memory
+        // sink — fail loud on an undersized maxResultSize (ADVICE r14)
+        StreamFixtures.assertDriverCollectCapacity(s, s"$fx/keyed",
+          "stream_ingest_floor")
+        StreamHarness.withSplitPerFile(s) {
+          StreamHarness.fed(s, "stream_floor", StreamHarness.batches(fx, "keyed")) {
+            _.select(col("event_id"), col("user_id"), col("value"))
           }
-          s.table(name).orderBy("event_id")
-        } finally StreamFixtures.deleteRecursively(srcDir)
+        }.orderBy("event_id")
       },
       Some("""SELECT event_id, user_id, value FROM events
              ORDER BY event_id""")),
@@ -1667,7 +1516,6 @@ object CoreQueries {
     QueryDef(
       "stream_drift_kl",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // reference mix FROZEN per JVM (offline-computed monitoring
         // baseline; see StreamFixtures.frozen)
         val ctRows = StreamFixtures.frozen("driftkl_ct|" + dir) {
@@ -1676,22 +1524,13 @@ object CoreQueries {
             .map(r => (r.getString(0), r.getLong(1)))
         }
         val nn = ctRows.map(_._2).sum
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-        val counts = src
-          .select(graft.core.Tables.tsUsExpr(schema).as("tsu"),
-            col("event_type").as("t"))
-          .select(expr("tsu div 86400000000").as("day"), col("t"))
+        val counts = StreamHarness.events(s, dir)
+          .select(expr("ts div 86400000000").as("day"), col("event_type").as("t"))
           .groupBy("day", "t").agg(count(lit(1)).as("c_dt"))
-        val name = "stream_kl_" + System.nanoTime()
-        val sq = counts.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try sq.processAllAvailable() finally sq.stop()
         import s.implicits._
         // localCheckpoint: the memory-sink MemoryPlan does not support
         // self-join attribute dedup — snapshot it into an ExistingRDD
-        val cdt = s.table(name).localCheckpoint()
+        val cdt = StreamHarness.run(s, "stream_kl", counts, "complete").localCheckpoint()
         val nd = cdt.groupBy("day").agg(sum("c_dt").as("n_d"))
         val ctDf = ctRows.toSeq.toDF("t", "c_t")
         cdt.join(nd, "day").join(broadcast(ctDf), "t")
@@ -1792,25 +1631,15 @@ object CoreQueries {
     QueryDef(
       "stream_static_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         // static dim: per-user tier derived once, batch-side
-        val tiers = s.read.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val tiers = Tables.events(s, dir)
           .select(col("user_id")).distinct()
           .select(col("user_id"), pmod(col("user_id"), lit(3)).as("tier"))
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-        val joined = src.join(broadcast(tiers), "user_id")
+        val joined = StreamHarness.events(s, dir).join(broadcast(tiers), "user_id")
           .groupBy("tier")
           .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
-        val name = "stream_sj_" + System.nanoTime()
-        val sq = joined.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("tier")
+        StreamHarness.run(s, "stream_sj", joined, "complete", availableNow = true)
+          .orderBy("tier")
       },
       Some("""SELECT user_id % 3 AS tier, count(*) AS n,
              sum(value::decimal(38,6))::double AS sum_value
@@ -1822,22 +1651,13 @@ object CoreQueries {
     QueryDef(
       "stream_dedup_exact",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val src = StreamHarness.events(s, dir)
         // duplicate the source (union with itself) then stateful-dedup
-        val doubled = src.union(src)
-        val deduped = doubled.dropDuplicates("event_id")
+        val deduped = src.union(src).dropDuplicates("event_id")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"))
-        val name = "stream_dd_" + System.nanoTime()
-        val sq = deduped.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("event_type")
+        StreamHarness.run(s, "stream_dd", deduped, "complete", availableNow = true)
+          .orderBy("event_type")
       },
       Some("""SELECT event_type, count(*) AS n
              FROM events GROUP BY event_type ORDER BY event_type""")),
@@ -1986,33 +1806,15 @@ object CoreQueries {
     QueryDef(
       "stream_cep_pattern",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_cep_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .filter(col("event_type").isin("click", "error", "purchase"))
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"),
+        // batch 1: old half — registers park in state; batch 2: recent
+        // half — cross-batch matches
+        cepFed(s, dir, "stream_cep",
             when(col("event_type") === "click", 0)
-              .when(col("event_type") === "error", 1).otherwise(2).as("kind"))
-          .as[graft.streaming.CepEvent]
-        val name = "stream_cep_" + System.nanoTime()
-        val q = graft.streaming.CepPattern(src, 3600L * 1000 * 1000)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: old half — registers park in state
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: recent half — cross-batch matches
-        } finally q.stop()
-        val res = s.table(name)
+              .when(col("event_type") === "error", 1).otherwise(2),
+            "click", "error", "purchase")(graft.streaming.CepPattern(_, 3600L * 1000 * 1000))
           .select(col("eventId").as("event_id"), col("k").cast("long").as("user_id"),
             col("pT").as("p_t"), col("clickT").as("click_t"))
           .orderBy("event_id")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH u AS (
                SELECT event_id, user_id, epoch_us(ts) AS t, 1 AS side
@@ -2046,32 +1848,14 @@ object CoreQueries {
     QueryDef(
       "stream_cep_kleene",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_kleene_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .filter(col("event_type").isin("click", "purchase"))
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"),
-            when(col("event_type") === "click", 0).otherwise(2).as("kind"))
-          .as[graft.streaming.CepEvent]
-        val name = "stream_kl_" + System.nanoTime()
-        val q = graft.streaming.CepKleene(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: counters park in state
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: counts straddle the boundary
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: counters park in state; batch 2: counts straddle the
+        // boundary
+        cepFed(s, dir, "stream_kl",
+            when(col("event_type") === "click", 0).otherwise(2),
+            "click", "purchase")(graft.streaming.CepKleene(_))
           .select(col("eventId").as("event_id"), col("k").cast("long").as("user_id"),
             col("nClicks").as("n_clicks"))
           .orderBy("event_id")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH u AS (
                SELECT event_id, user_id, epoch_us(ts) AS t, 1 AS side
@@ -2098,33 +1882,14 @@ object CoreQueries {
     QueryDef(
       "stream_funnel",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_funnel_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .filter(col("event_type").isin("view", "click", "purchase"))
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"),
+        // batch 1: registers park; batch 2: stages complete across batches
+        cepFed(s, dir, "stream_fn",
             when(col("event_type") === "view", 0)
-              .when(col("event_type") === "click", 1).otherwise(2).as("kind"))
-          .as[graft.streaming.CepEvent]
-        val name = "stream_fn_" + System.nanoTime()
-        val q = graft.streaming.FunnelTracker(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: registers park
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: stages complete across batches
-        } finally q.stop()
-        val res = s.table(name)
+              .when(col("event_type") === "click", 1).otherwise(2),
+            "view", "click", "purchase")(graft.streaming.FunnelTracker(_))
           .agg(sum(when(col("stage") === 1, 1L).otherwise(0L)).as("n_view"),
             sum(when(col("stage") === 2, 1L).otherwise(0L)).as("n_click_after"),
             sum(when(col("stage") === 3, 1L).otherwise(0L)).as("n_purchase_after"))
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH t1 AS (SELECT user_id, min(epoch_us(ts)) AS t1
                      FROM events WHERE event_type = 'view' GROUP BY 1),
@@ -2150,29 +1915,17 @@ object CoreQueries {
       "stream_session_paths",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_spaths_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"), col("event_type").as("etype"))
-          .as[graft.streaming.CepEvent2]
-        val name = "stream_sp_" + System.nanoTime()
-        val q = graft.streaming.SessionPaths(src, 1800L * 1000 * 1000)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: open sessions park in state
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: straddlers extend, then close
-        } finally q.stop()
-        val res = s.table(name)
-          .groupBy("path").agg(count(lit(1)).as("n"))
+        // batch 1: open sessions park in state; batch 2: straddlers
+        // extend, then close
+        StreamHarness.fed(s, "stream_sp",
+            StreamHarness.batches(StreamFixtures.eventsHalves(s, dir), "lo", "hi")) { src =>
+          graft.streaming.SessionPaths(src
+            .select(col("user_id").cast("string").as("k"), col("ts"),
+              col("seq"), col("event_type").as("etype"))
+            .as[graft.streaming.CepEvent2], 1800L * 1000 * 1000)
+        }.groupBy("path").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("path"))
           .limit(20)
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH e AS (
                SELECT user_id, epoch_us(ts) AS t, event_id AS seq, event_type
@@ -2205,29 +1958,14 @@ object CoreQueries {
       "stream_cohort_retention",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        val fx = StreamFixtures.eventsHalves(s, dir)
-        val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_cohort_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"), col("value").as("v"))
-          .as[graft.streaming.KeyedEvent]
-        val name = "stream_co_" + System.nanoTime()
-        val q = graft.streaming.CohortTracker(src, 604800000000L)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: cohorts register
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: later-week offsets emit
-        } finally q.stop()
-        val res = s.table(name)
-          .groupBy(col("cohortW").as("cohort_w"), col("offsetW").as("offset_w"))
+        // batch 1: cohorts register; batch 2: later-week offsets emit
+        StreamHarness.fed(s, "stream_co",
+            StreamHarness.batches(StreamFixtures.eventsHalves(s, dir), "lo", "hi")) { src =>
+          graft.streaming.CohortTracker(
+            StreamHarness.keyed(src).as[graft.streaming.KeyedEvent], 604800000000L)
+        }.groupBy(col("cohortW").as("cohort_w"), col("offsetW").as("offset_w"))
           .agg(count(lit(1)).as("n_users"))
           .orderBy("cohort_w", "offset_w")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH fw AS (
                SELECT user_id, min(epoch_us(ts) // 604800000000) AS cohort_w
@@ -2278,13 +2016,8 @@ object CoreQueries {
           count(lit(1)).as("n"),
           max_by(col("v"), col("ts")).as("v_final"),
           sum(col("v")).as("v_sum"))
-        val name = "stream_walk_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name).select("k", "n", "v_final", "v_sum").orderBy("k")
+        StreamHarness.run(s, "stream_walk", agg, "complete", availableNow = true)
+          .select("k", "n", "v_final", "v_sum").orderBy("k")
       },
       Some("""SELECT k, count(*) AS n,
                max_by(v, ts) AS v_final, sum(v)::bigint AS v_sum
@@ -2796,7 +2529,6 @@ object CoreQueries {
     QueryDef(
       "stream_interval_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val bRow = Q.events(s, dir)
           .agg(min(col("ts")).as("tmin"), max(col("ts")).as("tmax")).head()
         val (tmin, tmax) = (bRow.getLong(0), bRow.getLong(1))
@@ -2807,23 +2539,16 @@ object CoreQueries {
           .withColumn("cend", col("cstart") + lit(2 * w))
           .select(col("camp"), col("cstart"), col("cend"),
             explode(sequence(col("camp"), col("camp") + 1)).as("bucket"))
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .select(graft.core.Tables.tsUsExpr(schema).as("ts"), col("value"))
+        val src = StreamHarness.events(s, dir)
+          .select(col("ts"), col("value"))
           .withColumn("bucket", expr(s"(ts - ${tmin}L) div ${w}L"))
         val agg = src.join(broadcast(campBuckets), Seq("bucket"))
           .filter(col("ts") >= col("cstart") && col("ts") < col("cend"))
           .groupBy("camp")
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
-        val name = "stream_ij_" + System.nanoTime()
-        val sq = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("camp")
+        StreamHarness.run(s, "stream_ij", agg, "complete", availableNow = true)
+          .orderBy("camp")
       },
       Some("""WITH b AS (
                SELECT min(epoch_us(ts)) AS tmin, max(epoch_us(ts)) AS tmax

@@ -315,11 +315,9 @@ object DedupQueries {
       "stream_neardup_minhash",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/documents.parquet")
         // scanWide: shingling + 8 minhash sweeps dominate — parallelize
         // the signature map before the narrow (band,bh) state shuffle
-        val src = StreamHarness.scanWide(s, s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+        val src = StreamHarness.scanWide(s, StreamHarness.table(s, dir, "documents"))
         val sigs = shingledFrom(src)
           .select(col("doc_id"), shingleHashes.as("hs"))
           .select(
@@ -335,12 +333,7 @@ object DedupQueries {
           .select(col("e.band").as("band"), col("e.bh").as("bh"),
             col("docId"), col("sig"))
           .as[graft.streaming.BandDoc]
-        val name = "stream_nd_" + System.nanoTime()
-        val sq = graft.streaming.StreamNearDup(banded, 6)
-          .writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.run(s, "stream_nd", graft.streaming.StreamNearDup(banded, 6))
           .select(col("idA").as("id_a"), col("idB").as("id_b"),
             col("nEq").as("n_eq"))
           .distinct()

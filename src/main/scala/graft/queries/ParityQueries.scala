@@ -233,24 +233,11 @@ object ParityQueries {
       "stream_trigger_slices_before",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-          .select(col("user_id").cast("string").as("k"),
-            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-            col("value").as("v"),
+        val src = StreamHarness.keyed(StreamHarness.events(s, dir),
             (col("event_type") === "error").as("gate"))
           .as[graft.streaming.GatedEvent]
-        val name = "stream_tsb_" + System.nanoTime()
-        val sq = graft.streaming.TriggerSlices.tagged(src, before = true)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
-          .select(col("k").cast("long").as("user_id"),
-            col("windowId").as("window_id"), col("n"),
-            col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
-          .orderBy("user_id", "window_id")
+        CoreQueries.sliceBuckets(StreamHarness.run(s, "stream_tsb",
+          graft.streaming.TriggerSlices.tagged(src, before = true)))
       },
       Some("""SELECT user_id, window_id, n, sum_value FROM (
                SELECT user_id, window_id, count(*) AS n,

@@ -655,9 +655,7 @@ object SimilarityQueries {
             .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq, r.getDouble(2)))
             .sortBy(_._1)
         }
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/embeddings.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+        val src = StreamHarness.table(s, dir, "embeddings")
           .filter(col("vec_id") % 2 === 1)
           .select(col("vec_id"),
             transform(col("embedding"), _.cast("double")).as("v"))
@@ -675,11 +673,8 @@ object SimilarityQueries {
         val counts = withScores.withColumn("cell", cell)
           .groupBy("cell")
           .agg(count(lit(1)).as("n_routed"), sum("vec_id").as("id_sum"))
-        val name = "stream_ivfapp_" + System.nanoTime()
-        val sq = counts.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).select("cell", "n_routed", "id_sum").orderBy("cell")
+        StreamHarness.run(s, "stream_ivfapp", counts, "complete")
+          .select("cell", "n_routed", "id_sum").orderBy("cell")
       },
       Some(s"""WITH $embSql,
              base AS (SELECT * FROM emb WHERE vec_id % 2 = 0),
@@ -1504,42 +1499,29 @@ object SimilarityQueries {
           graft.operators.LinearProbe.train(e, ProbeK, ProbeD, ProbeSteps)
         }
         val bw = s.sparkContext.broadcast(w)
-        val fx = StreamFixtures.embHalves(s, dir)
-        val schema = StreamFixtures.embHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_qp_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val agg = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("v", transform(col("embedding"), _.cast("double")))
-          .withColumn("n2", call_function("dotd", col("v"), col("v")))
-          .filter(col("n2") > 0) // zero-norm guard: identical to the batch side
-          .select(col("label").cast("int").as("_1"),
-            transform(col("v"),
-              x => floor(x / sqrt(col("n2")) * ProbeQ).cast("long")).as("_2"))
-          .as[(Int, Seq[Long])]
-          .map { case (l, xq) =>
-            (l.toLong,
-              if (graft.operators.LinearProbe.predict(bw.value, xq.toArray) == l) 1L
-              else 0L)
-          }
-          .toDF("label", "ok")
-          .groupBy("label")
-          .agg(count(lit(1)).as("n"), sum(col("ok")).as("n_correct"))
-        val name = "stream_qp_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: counts accumulate
-        } finally q.stop()
-        val res = s.table(name)
-          .withColumn("acc_pm", expr("n_correct * 1000 DIV n"))
+        // batch 1: low-id half; batch 2: counts accumulate
+        StreamHarness.fed(s, "stream_qp",
+            StreamHarness.batches(StreamFixtures.embHalves(s, dir), "lo", "hi"),
+            "complete") { src =>
+          src.withColumn("v", transform(col("embedding"), _.cast("double")))
+            .withColumn("n2", call_function("dotd", col("v"), col("v")))
+            .filter(col("n2") > 0) // zero-norm guard: identical to the batch side
+            .select(col("label").cast("int").as("_1"),
+              transform(col("v"),
+                x => floor(x / sqrt(col("n2")) * ProbeQ).cast("long")).as("_2"))
+            .as[(Int, Seq[Long])]
+            .map { case (l, xq) =>
+              (l.toLong,
+                if (graft.operators.LinearProbe.predict(bw.value, xq.toArray) == l) 1L
+                else 0L)
+            }
+            .toDF("label", "ok")
+            .groupBy("label")
+            .agg(count(lit(1)).as("n"), sum(col("ok")).as("n_correct"))
+        }.withColumn("acc_pm", expr("n_correct * 1000 DIV n"))
           .select(col("label").cast("long").as("label"), col("n"),
             col("n_correct"), col("acc_pm"))
           .orderBy("label")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some(linearProbeSql(ProbeK, ProbeD, ProbeQ, ProbeSteps))),
 
@@ -1758,9 +1740,7 @@ object SimilarityQueries {
             .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
             .sortBy(_._1)
         }
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/embeddings.parquet")
-        val src = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+        val src = StreamHarness.table(s, dir, "embeddings")
         // same sequential accumulation order as dotd / the oracle's
         // list_reduce; argmax ascending with strict `>` == the oracle's
         // row_number(ccos DESC, c_id ASC) tie-break. The codebook ships
@@ -1795,12 +1775,7 @@ object SimilarityQueries {
         // 1.2 GiB single-task result against the 1g default)
         StreamFixtures.assertDriverCollectCapacity(
           s, s"$dir/embeddings.parquet", "stream_semdedup")
-        val name = "stream_sd_" + System.nanoTime()
-        val sq = graft.streaming.StreamSemDedup(cv, 0.3)
-          .writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.run(s, "stream_sd", graft.streaming.StreamSemDedup(cv, 0.3))
           .select(col("idA").as("id_a"), col("idB").as("id_b"), col("qcos"))
           .distinct()
           .orderBy("id_a", "id_b")

@@ -1,11 +1,24 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Tables
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Harness plumbing for the streaming query catalog.
+  *
+  * [[StreamHarness.run]] is the one run protocol every streaming catalog
+  * query uses: it starts the query into a memory sink, runs the first
+  * micro-batch to quiescence, stages and [[StreamHarness.settle]]s each
+  * later batch, stops the query whatever happens, and returns the sink
+  * table. [[StreamHarness.fed]] is its file-fed form: it stages fixture
+  * parts into a fresh scratch source directory, one staging per
+  * micro-batch, and deletes the directory afterwards.
+  * [[StreamHarness.events]] is the streaming twin of
+  * [[graft.core.Tables.events]]. (`stream_checkpoint_resume` keeps its own
+  * protocol: two query incarnations over one checkpoint into a file sink.)
   *
   * Two levers keep the streaming subset bench-honest (VERDICT r2 "What's
   * wrong" #1/#2):
@@ -27,6 +40,85 @@ import scala.jdk.CollectionConverters._
   *      each run just hard-copies the small files into a fresh source dir.
   */
 object StreamHarness {
+
+  /** The table `name.parquet` of fixture `dir` as a file stream — the
+    * streaming twin of [[graft.core.Tables.table]]. The file source wants
+    * a directory, so it globs the one table file; the whole table is the
+    * first micro-batch.
+    */
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    s.readStream.schema(Tables.cachedSchema(s, Tables.path(dir, name)))
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+
+  /** The events table as a stream, with the columns of
+    * [[graft.core.Tables.events]]: `ts` in epoch-µs and `seq` = event_id.
+    * Like its batch twin it reads nanosecond timestamps as Long.
+    */
+  def events(s: SparkSession, dir: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = table(s, dir, "events")
+    raw.withColumn("ts", Tables.tsUsExpr(raw.schema)).withColumn("seq", col("event_id"))
+  }
+
+  /** An events frame (batch or stream) in the typed stream operators'
+    * `(k, ts, seq, v)` shape ([[graft.streaming.KeyedEvent]]), keyed by
+    * user, plus `extra` columns.
+    */
+  def keyed(events: DataFrame, extra: Column*): DataFrame =
+    events.select(Seq(col("user_id").cast("string").as("k"), col("ts"), col("seq"),
+      col("value").as("v")) ++ extra: _*)
+
+  /** Run `stream` into a memory sink named `<name>_<nanos>` and return the
+    * sink table. The first micro-batch runs to quiescence
+    * (`processAllAvailable`); each of `later` then stages one more batch,
+    * which [[settle]] runs. `check` sees the finished query (its progress
+    * log) before `stop()`, which runs whatever happened. `availableNow`
+    * runs the first batch under the AvailableNow trigger.
+    */
+  def run(s: SparkSession, name: String, stream: Dataset[_],
+      mode: String = "append", availableNow: Boolean = false,
+      later: Seq[() => Unit] = Nil,
+      check: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val sink = s"${name}_${System.nanoTime()}"
+    val w = stream.writeStream.queryName(sink).format("memory").outputMode(mode)
+    val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    try {
+      q.processAllAvailable()
+      later.foreach { stage => stage(); settle(q) }
+      check(q)
+    } finally q.stop()
+    s.table(sink)
+  }
+
+  /** One micro-batch of a file-fed run: the fixture parts it stages, as
+    * (fixture root, part directory) pairs. */
+  type Batch = Seq[(String, String)]
+
+  /** One single-part batch per part of fixture `root`, in order. */
+  def batches(root: String, parts: String*): Seq[Batch] = parts.map(p => Seq(root -> p))
+
+  /** [[run]] over a file stream fed from fixture parts: `batches.head` is
+    * staged into a fresh scratch source directory before the stream
+    * starts, each later batch once the previous one has run. `build` gets
+    * the file stream, whose schema is that of the first part, and returns
+    * the query. The scratch directory is deleted afterwards; the memory
+    * sink does not read it.
+    */
+  def fed(s: SparkSession, name: String, batches: Seq[Batch],
+      mode: String = "append", availableNow: Boolean = false,
+      check: StreamingQuery => Unit = _ => ())(
+      build: DataFrame => Dataset[_]): DataFrame = {
+    val root = StreamFixtures.scratchDir(s"graft_${name}_")
+    val src = s"$root/src"
+    def stage(b: Batch): Unit = b.foreach { case (fx, part) => StreamFixtures.feed(fx, part, src) }
+    try {
+      stage(batches.head)
+      val (fx, part) = batches.head.head
+      val in = s.readStream.schema(Tables.cachedSchema(s, s"$fx/$part")).parquet(src)
+      run(s, name, build(in), mode, availableNow,
+        batches.tail.map(b => () => stage(b)), check)
+    } finally StreamFixtures.deleteRecursively(root)
+  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` set to `n`, restoring
     * the previous session value afterwards. The streaming state-store
@@ -95,7 +187,7 @@ object StreamHarness {
     * trigger, doesn't satisfy the wait) or correctly concludes
     * everything is processed.
     */
-  def settle(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  def settle(q: StreamingQuery): Unit = {
     q.processAllAvailable()
     q.processAllAvailable()
   }
@@ -155,7 +247,7 @@ object StreamHarness {
     * change), the watermark jumps past the corpus after batch 0 and
     * every later real event is silently late-dropped (ADVICE r13).
     * Callers assert this is 0 after settle() so that failure is loud. */
-  def watermarkDrops(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+  def watermarkDrops(q: StreamingQuery): Long =
     q.recentProgress.iterator
       .flatMap(_.stateOperators.iterator.map(_.numRowsDroppedByWatermark))
       .sum
@@ -217,10 +309,6 @@ object StreamFixtures {
     })
   }
 
-  /** Schema of the fixture halves (= Tables.events schema). */
-  def eventsHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, eventsHalves(s, dir) + "/lo")
-
   /** The orders table split into two halves by o_orderdate (change-log
     * time) — the SCD2 streaming twin feeds these to prove an interval
     * OPEN in batch-1 state extends across the batch boundary. Same-date
@@ -253,10 +341,6 @@ object StreamFixtures {
     })
   }
 
-  /** Schema of the orders fixture halves. */
-  def ordersHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, ordersHalves(s, dir) + "/lo")
-
   /** The documents table split by doc_id median — the streaming corpus
     * pipeline feeds lower ids first, so first-wins dedup across batches
     * equals the batch keep-min-doc_id rule.
@@ -271,10 +355,6 @@ object StreamFixtures {
       root
     })
   }
-
-  /** Schema of the documents fixture halves. */
-  def docsHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, docsHalves(s, dir) + "/lo")
 
   /** The documents table split into the FOUR deterministic batches of the
     * TTL-registry gate (`stream_clean_corpus_ttl`): grp = doc_id % 3 →
@@ -298,10 +378,6 @@ object StreamFixtures {
     })
   }
 
-  /** Schema of the TTL-gate batches (documents + event-time ts). */
-  def docsTtlBatchesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, docsTtlBatches(s, dir) + "/b1")
-
   def embHalves(s: SparkSession, dir: String): String = cache.synchronized {
     cache.getOrElseUpdate("emb_halves|" + dir, {
       val d = s.read.parquet(s"$dir/embeddings.parquet")
@@ -312,8 +388,6 @@ object StreamFixtures {
       root
     })
   }
-  def embHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, embHalves(s, dir) + "/lo")
 
   /** The events table hash-partitioned by user_id into one parquet file
     * per core under `keyed/` — the KEYED-TOPIC ingest shape (VERDICT r13
@@ -327,23 +401,23 @@ object StreamFixtures {
     * so the key shuffle moves finished sessions with no extra exchange.
     * Explicit partition count (not AQE-coalesced); empty partitions write
     * no file, so the file count is ≤ cores — callers must not assume N.
+    * Columns: the raw events columns, with `ts` already in epoch-µs.
     */
   def eventsKeyed(s: SparkSession, dir: String): String = cache.synchronized {
     cache.getOrElseUpdate("events_keyed|" + dir, {
-      val raw = s.read.parquet(s"$dir/events.parquet")
       val root = Files.createTempDirectory("graft_fx_evkeyed_").toString
-      raw.repartition(s.sparkContext.defaultParallelism, col("user_id"))
+      keyedEvents(s, dir)
+        .repartition(s.sparkContext.defaultParallelism, col("user_id"))
         .write.parquet(s"$root/keyed")
       root
     })
   }
 
-  /** Schema of the keyed events fixture (= raw events.parquet schema). */
-  def eventsKeyedSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, eventsKeyed(s, dir) + "/keyed")
+  private def keyedEvents(s: SparkSession, dir: String): DataFrame =
+    graft.core.Tables.events(s, dir).drop("seq")
 
   /** One-row session-window FLUSH sentinel (VERDICT r12 #3): raw events
-    * schema, key -1, event time tmax + 2·gap. It advances the global
+    * columns, key -1, event time tmax + 2·gap. It advances the global
     * watermark past every real session's end (≤ tmax + gap), so
     * APPEND-mode `session_window` emits each session exactly once and
     * drains its state — replacing complete-mode's re-emission of the
@@ -357,30 +431,20 @@ object StreamFixtures {
     */
   def sessionFlushFixture(s: SparkSession, dir: String): String = cache.synchronized {
     cache.getOrElseUpdate("sw_flush|" + dir, {
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = keyedEvents(s, dir)
       // The sentinel RESERVES user_id = -1 and the query filters it back
       // out; a corpus that legitimately contains -1 would silently lose
       // that user's sessions from the Spark leg only (ADVICE r13) — fail
       // loudly here instead. Same agg pass as the tmax scan.
-      val hdr = raw.agg(max(graft.core.Tables.tsUsExpr(raw.schema)),
+      val hdr = raw.agg(max(col("ts")),
         sum(when(col("user_id") === -1L, 1L).otherwise(0L))).head()
       require(hdr.isNullAt(1) || hdr.getLong(1) == 0L,
         s"sessionFlushFixture: corpus $dir/events.parquet contains " +
           s"${hdr.getLong(1)} rows with user_id = -1 — the reserved flush-" +
           "sentinel key; stream_session_window would silently drop them")
-      val tmaxUs = hdr.getLong(0)
-      val flushUs = tmaxUs + 7200000000L // +2 h: strictly past every end
-      val tsCol = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => lit(flushUs * 1000L) // ns
-        case t => timestamp_micros(lit(flushUs)).cast(t)
-      }
-      val row = raw.limit(1).select(raw.schema.fields.map { f =>
-        f.name match {
-          case "ts" => tsCol.as("ts")
-          case "user_id" => lit(-1L).cast(f.dataType).as("user_id")
-          case _ => col(f.name)
-        }
-      }.toSeq: _*)
+      val flushUs = hdr.getLong(0) + 7200000000L // +2 h: strictly past every end
+      val row = raw.limit(1).withColumn("ts", lit(flushUs))
+        .withColumn("user_id", lit(-1L))
       val root = Files.createTempDirectory("graft_fx_swflush_").toString
       row.coalesce(1).write.parquet(s"$root/flush")
       root

@@ -132,6 +132,50 @@ object TextQueries {
              FROM placed GROUP BY shard, bin ORDER BY shard, bin"""
   }
 
+  /** The corpus-cleaning twins' quality gate (20–1000 tokens) as
+    * KeepFirst's keyed docs, plus `extra` columns.
+    */
+  private def gatedDocs(src: DataFrame, extra: Column*): DataFrame =
+    src.withColumn("n_tokens", size(split(col("text"), " ")))
+      .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
+      .select(Seq(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
+        col("lang"), col("n_tokens").cast("long").as("nTokens")) ++ extra: _*)
+
+  /** The corpus-cleaning twins' per-language rollup of the kept docs. */
+  private def langRollup(kept: DataFrame): DataFrame =
+    kept.groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"),
+        Q.dsum(col("nTokens")).cast("long").as("total_tokens"))
+      .orderBy("lang")
+
+  /** stream_seq_pack and its one-shard twin: arrival-order next-fit
+    * packing over the doc_id-split halves. Batch 1 is the low-id half;
+    * in batch 2 the open bins keep filling.
+    */
+  private def streamSeqPack(s: SparkSession, dir: String, name: String,
+      shard: Option[Int]): DataFrame = {
+    import s.implicits._
+    StreamHarness.fed(s, name,
+        StreamHarness.batches(StreamFixtures.docsHalves(s, dir), "lo", "hi"),
+        "complete") { src =>
+      val items = src.select(
+        pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
+          .cast("int").as("shard"),
+        col("doc_id").as("id"),
+        size(split(col("text"), " ")).as("len"))
+      graft.streaming.StreamPacking.nextFit(
+          shard.fold(items)(sh => items.filter(col("shard") === sh))
+            .as[graft.streaming.PackItem], 512)
+        .groupBy("shard", "bin")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("len")).cast("long").as("n_tokens"),
+          Q.hash60(concat_ws(" ",
+            transform(sort_array(collect_list(struct(col("start"), col("id")))),
+              x => x.getField("start").cast("string")))).as("bounds_fp"),
+          sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
+    }.orderBy("shard", "bin")
+  }
+
   /** DuckDB replay of next-fit packing (the doc_seq_pack/stream_seq_pack
     * recursive step machine), parameterized by the within-shard order
     * (len-desc for NFD, id for arrival-order streaming) and an optional
@@ -800,11 +844,9 @@ object TextQueries {
             .groupBy("w").agg(count(lit(1)).as("wn"))
           graft.operators.BPE.train(words, rounds = 8)
         }
-        val schema = graft.core.Tables.cachedSchema(s, s"$dir/documents.parquet")
         // scanWide: the JVM tokenize is the CPU cost here — fan the
         // single-split fixture scan across cores before it
-        val src = StreamHarness.scanWide(s, s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+        val src = StreamHarness.scanWide(s, StreamHarness.table(s, dir, "documents"))
         val rules = graft.operators.BPE.compileRules(merges)
         val out = {
           import s.implicits._
@@ -840,11 +882,7 @@ object TextQueries {
               }
             }.toDF("doc_id", "n_tokens")
         }
-        val name = "stream_bpe_" + System.nanoTime()
-        val sq = out.writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("doc_id")
+        StreamHarness.run(s, "stream_bpe", out).orderBy("doc_id")
       },
       Some(graft.operators.BPE.encodeOracleWith(
         """SELECT w, count(*) AS wn FROM (
@@ -1133,32 +1171,12 @@ object TextQueries {
       "stream_clean_corpus",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_scc_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("n_tokens", size(split(col("text"), " ")))
-          .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
-          .select(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
-            col("lang"), col("n_tokens").cast("long").as("nTokens"))
-          .as[graft.streaming.KeyedDoc]
-        val name = "stream_scc_" + System.nanoTime()
-        val q = graft.streaming.KeepFirst(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: low doc_ids seed the registry
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: cross-batch dups suppressed
-        } finally q.stop()
-        val res = s.table(name)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            Q.dsum(col("nTokens")).cast("long").as("total_tokens"))
-          .orderBy("lang")
-        StreamFixtures.deleteRecursively(root)
-        res
+        // batch 1: low doc_ids seed the registry; batch 2: cross-batch
+        // dups suppressed
+        langRollup(StreamHarness.fed(s, "stream_scc",
+            StreamHarness.batches(StreamFixtures.docsHalves(s, dir), "lo", "hi")) { src =>
+          graft.streaming.KeepFirst(gatedDocs(src).as[graft.streaming.KeyedDoc])
+        })
       },
       Some(s"""WITH quality AS (
              SELECT *, len(string_split(text, ' ')) AS n_tokens
@@ -1210,38 +1228,14 @@ object TextQueries {
             "spark.sql.streaming.noDataMicroBatches.enabled=true: the " +
             "TtlGate closed form counts on an idle micro-batch firing " +
             "evictions between event-time batches")
-        val fx = StreamFixtures.docsTtlBatches(s, dir)
-        val schema = StreamFixtures.docsTtlBatchesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_scct_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "b1", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("n_tokens", size(split(col("text"), " ")))
-          .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
-          .select(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
-            col("lang"), col("n_tokens").cast("long").as("nTokens"),
-            col("ts"))
-          .as[graft.streaming.TsKeyedDoc]
-        val name = "stream_scct_" + System.nanoTime()
-        val q = graft.streaming.KeepFirst.withTtl(src, TtlGate.TtlMs)
-          .writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try {
-          q.processAllAvailable() // b1: grp-0 keys seed the registry
-          StreamFixtures.feed(fx, "b2", srcDir)
-          StreamHarness.settle(q) // b2: wm→T2 > T1+ttl — idle b1 keys evict
-          StreamFixtures.feed(fx, "b3", srcDir)
-          StreamHarness.settle(q) // b3: refreshed keys survive (T3 < T2+ttl)
-          StreamFixtures.feed(fx, "b4", srcDir)
-          StreamHarness.settle(q) // b4: grp-0 replay — evicted keys re-emit
-        } finally q.stop()
-        val res = s.table(name)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            Q.dsum(col("nTokens")).cast("long").as("total_tokens"))
-          .orderBy("lang")
-        StreamFixtures.deleteRecursively(root)
-        res
+        // b1: grp-0 keys seed the registry; b2: wm→T2 > T1+ttl — idle b1
+        // keys evict; b3: refreshed keys survive (T3 < T2+ttl); b4: grp-0
+        // replay — evicted keys re-emit
+        langRollup(StreamHarness.fed(s, "stream_scct", StreamHarness.batches(
+            StreamFixtures.docsTtlBatches(s, dir), "b1", "b2", "b3", "b4")) { src =>
+          graft.streaming.KeepFirst.withTtl(
+            gatedDocs(src, col("ts")).as[graft.streaming.TsKeyedDoc], TtlGate.TtlMs)
+        })
       },
       Some(s"""WITH quality AS MATERIALIZED (
              SELECT doc_id, lang,
@@ -1415,36 +1409,24 @@ object TextQueries {
             .select(explode(grams8(col("t"))).as("h"))
             .distinct().localCheckpoint(true)
         }
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_sdc_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        // scanWide: the 8-gram hash explode is the CPU cost — fan the
-        // single-split scan across cores before computing it
-        val src = StreamHarness.scanWide(s,
-            s.readStream.schema(schema).parquet(srcDir))
-          .filter(col("doc_id") % 20 =!= 0 &&
-            size(split(col("text"), " ")) >= 8)
-          .select(col("doc_id"), split(col("text"), " ").as("t"))
-          .select(col("doc_id"), explode(grams8(col("t"))).as("h"))
-          // stream-static: the static index must BROADCAST — without the
-          // hint the planner shuffle-joins, re-exchanging the exploded
-          // stream side every micro-batch (measured 9.6 s → 2.5 s)
-          .join(broadcast(bench), "h")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_hits"))
-        val name = "stream_sdc_" + System.nanoTime()
-        val q = src.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: hits accumulate across batches
-        } finally q.stop()
-        val res = s.table(name).orderBy("doc_id")
-        StreamFixtures.deleteRecursively(root)
-        res
+        // batch 1: low-id half; batch 2: hits accumulate across batches
+        StreamHarness.fed(s, "stream_sdc",
+            StreamHarness.batches(StreamFixtures.docsHalves(s, dir), "lo", "hi"),
+            "complete") { src =>
+          // scanWide: the 8-gram hash explode is the CPU cost — fan the
+          // single-split scan across cores before computing it
+          StreamHarness.scanWide(s, src)
+            .filter(col("doc_id") % 20 =!= 0 &&
+              size(split(col("text"), " ")) >= 8)
+            .select(col("doc_id"), split(col("text"), " ").as("t"))
+            .select(col("doc_id"), explode(grams8(col("t"))).as("h"))
+            // stream-static: the static index must BROADCAST — without the
+            // hint the planner shuffle-joins, re-exchanging the exploded
+            // stream side every micro-batch (measured 9.6 s → 2.5 s)
+            .join(broadcast(bench), "h")
+            .groupBy("doc_id")
+            .agg(count(lit(1)).as("n_hits"))
+        }.orderBy("doc_id")
       },
       Some(s"""WITH base AS (
              SELECT doc_id,
@@ -2345,38 +2327,7 @@ object TextQueries {
     QueryDef(
       "stream_seq_pack",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_spk_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(
-            pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
-              .cast("int").as("shard"),
-            col("doc_id").as("id"),
-            size(split(col("text"), " ")).as("len"))
-          .as[graft.streaming.PackItem]
-        val packed = graft.streaming.StreamPacking.nextFit(src, 512).toDF()
-        val agg = packed.groupBy("shard", "bin")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("len")).cast("long").as("n_tokens"),
-            Q.hash60(concat_ws(" ",
-              transform(sort_array(collect_list(struct(col("start"), col("id")))),
-                x => x.getField("start").cast("string")))).as("bounds_fp"),
-            sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
-        val name = "stream_spk_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: open bins keep filling
-        } finally q.stop()
-        val res = s.table(name).orderBy("shard", "bin")
-        StreamFixtures.deleteRecursively(root)
-        res
+        streamSeqPack(s, dir, "stream_spk", None)
       },
       Some(nfdPackSql("id"))),
 
@@ -2415,39 +2366,7 @@ object TextQueries {
     QueryDef(
       "stream_seq_pack_s0",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        import s.implicits._
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_spk0_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(
-            pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
-              .cast("int").as("shard"),
-            col("doc_id").as("id"),
-            size(split(col("text"), " ")).as("len"))
-          .filter(col("shard") === 0)
-          .as[graft.streaming.PackItem]
-        val packed = graft.streaming.StreamPacking.nextFit(src, 512).toDF()
-        val agg = packed.groupBy("shard", "bin")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("len")).cast("long").as("n_tokens"),
-            Q.hash60(concat_ws(" ",
-              transform(sort_array(collect_list(struct(col("start"), col("id")))),
-                x => x.getField("start").cast("string")))).as("bounds_fp"),
-            sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
-        val name = "stream_spk0_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: open bins keep filling
-        } finally q.stop()
-        val res = s.table(name).orderBy("shard", "bin")
-        StreamFixtures.deleteRecursively(root)
-        res
+        streamSeqPack(s, dir, "stream_spk0", Some(0))
       },
       Some(nfdPackSql("id", Some(0)))),
 
@@ -2496,15 +2415,10 @@ object TextQueries {
           Encoders.product[Multimodal.MediaRow]
         imageClips(s, dir) // ensure the fixture parquet exists
         val root = MediaFixtures.rootOf(dir, "image")
-        val schema = graft.core.Tables.cachedSchema(s, root)
-        val src = s.readStream.schema(schema).parquet(root)
+        val src = s.readStream.schema(graft.core.Tables.cachedSchema(s, root)).parquet(root)
           .as[Multimodal.MediaRow]
-        val hashed = Codecs.imageHashes(src).toDF("id", "phash")
-        val name = "stream_imgfp_" + System.nanoTime()
-        val sq = hashed.writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("id")
+        StreamHarness.run(s, "stream_imgfp", Codecs.imageHashes(src).toDF("id", "phash"))
+          .orderBy("id")
       },
       Some(s"""$imageFpCte SELECT id, phash FROM ph ORDER BY id""")),
 

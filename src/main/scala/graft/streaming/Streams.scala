@@ -11,8 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Structured Streaming (SURVEY §1.2, §4.2): event-time columns +
   * watermarks for time slices, stateful operators for count/trigger
   * slices and multi-input buckets. The batch kernel (WindowKernel) and
-  * these operators share semantics — the conformance spec runs the same
-  * data through both and asserts identical buckets.
+  * these operators share semantics: [[SliceFold]] takes its close/open
+  * rules from the batch `Slice` vocabulary, and `SlicePropertySpec` runs
+  * random streams through both and asserts identical closed buckets.
   */
 object Streams {
 
@@ -116,54 +117,191 @@ object SlicedHopping {
   }
 }
 
+/** The event shape the slice fold reads: scespet's `(ts, seq, key,
+  * value)` plus a `gate` bit. The plan evaluates any trigger or window
+  * predicate into `gate` ([[GatedEvent]]); a [[KeyedEvent]] carries none,
+  * so the count path folds its rows as they arrive, with no conversion.
+  */
+sealed trait SliceEvent {
+  def k: String
+  def ts: Long
+  def seq: Long
+  def v: Double
+  def gate: Boolean
+}
+
 /** Typed stream element for the stateful operators (the scespet
   * `(ts, seq, key, value)` event shape).
   */
-final case class KeyedEvent(k: String, ts: Long, seq: Long, v: Double)
+final case class KeyedEvent(k: String, ts: Long, seq: Long, v: Double) extends SliceEvent {
+  def gate: Boolean = false
+}
 
-/** A closed (or final partial) count-window bucket. */
+/** A [[KeyedEvent]] with the trigger or window predicate evaluated. */
+final case class GatedEvent(k: String, ts: Long, seq: Long, v: Double, gate: Boolean)
+    extends SliceEvent
+
+/** A closed slice bucket (a count bucket, a trigger bucket or a gated
+  * session). */
 final case class CountBucket(
     k: String, windowId: Long, n: Long, sum: Double, mn: Double, mx: Double)
 
-private final case class CountSliceState(
-    windowId: Long, n: Long, sum: Double, mn: Double, mx: Double)
+/** The slice fold's per-key state: the open bucket and, for sessions,
+  * whether the gate is up. */
+private final case class SliceState(
+    windowId: Long, n: Long, sum: Double, mn: Double, mx: Double, open: Boolean)
 
-/** Count-based slicing on a live stream (scespet `Events(n)` /
-  * `group(3.events).reduce`, SliceTriggerSpec.scala:53-56): no Spark
-  * built-in exists, so per-key state in `flatMapGroupsWithState` counts
-  * events and emits a bucket each time N accumulate. Batch twin:
-  * `WindowKernel.withWindowId(Slice.Count(n))`.
+/** The one per-key slice fold of the streaming side: count, trigger and
+  * gated slicing on a live stream share this state machine, and each rule
+  * is the batch vocabulary's, so a stream's CLOSED buckets equal the batch
+  * buckets ([[graft.core.WindowKernel]]) restricted to closed ones.
+  * `SlicePropertySpec` checks that parity on random streams with ties.
   *
-  * Ordering contract: within one micro-batch the group's events are
-  * sorted by (ts, seq) before folding; across batches arrival order must
-  * respect event order per key (the standard per-key-ordered-source
-  * assumption, e.g. a keyed Kafka topic).
+  *   - [[SliceFold.Count]] — `Slice.Count(n)`: every n events in
+  *     (ts, seq) order close a bucket.
+  *   - [[SliceFold.Trigger]] — `Slice.TriggerCol(gate, align)`: rows
+  *     sharing one `ts` are one atomic cycle (scespet
+  *     SlowGraphWalk.java:82-92), as the batch RANGE frame has it. `After`:
+  *     a cycle holding triggers joins the bucket it closes. `Before`: it
+  *     opens the new bucket. The bucket id advances by the number of
+  *     triggers in the cycle, as `sum(cond)` does.
+  *   - [[SliceFold.Sessions]] — `WindowKernel.withSessions(gate)`: a
+  *     false→true edge opens session id+1 with its event; a true→false
+  *     edge closes it and excludes its event.
+  *
+  * Ordering contract: each micro-batch's group is sorted by (ts, seq)
+  * before folding; across batches, arrival order must respect event order
+  * per key (the per-key-ordered-source assumption, e.g. a keyed Kafka
+  * topic), and a cycle never straddles micro-batches.
   */
-object CountSlices {
+object SliceFold {
 
-  def apply(events: Dataset[KeyedEvent], n: Int): Dataset[CountBucket] = {
+  sealed trait Rule extends Serializable
+  final case class Count(n: Int) extends Rule {
+    require(n > 0, s"count slices need n > 0, got $n")
+  }
+  final case class Trigger(align: graft.core.Align) extends Rule
+  case object Sessions extends Rule
+
+  def apply[E <: SliceEvent](events: Dataset[E], rule: Rule): Dataset[CountBucket] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.k)
-      .flatMapGroupsWithState[CountSliceState, CountBucket](
+      .flatMapGroupsWithState[SliceState, CountBucket](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[KeyedEvent], state: GroupState[CountSliceState]) =>
-          var s = state.getOption.getOrElse(
-            CountSliceState(0L, 0L, 0.0, Double.MaxValue, Double.MinValue))
-          val out = Seq.newBuilder[CountBucket]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            s = CountSliceState(s.windowId, s.n + 1, s.sum + e.v,
-              math.min(s.mn, e.v), math.max(s.mx, e.v))
-            if (s.n == n) {
-              out += CountBucket(key, s.windowId, s.n, s.sum, s.mn, s.mx)
-              s = CountSliceState(s.windowId + 1, 0L, 0.0, Double.MaxValue, Double.MinValue)
-            }
+        (key: String, it: Iterator[E], state: GroupState[SliceState]) =>
+          val es = it.toArray[SliceEvent]
+          java.util.Arrays.sort(es, ByTsSeq)
+          val b = new Bucket(key, state.getOption.getOrElse(
+            SliceState(0L, 0L, 0.0, Double.MaxValue, Double.MinValue, open = false)))
+          rule match {
+            case Count(n) =>
+              es.foreach { e => b.add(e.v); if (b.n == n) b.close(b.id + 1) }
+            case Trigger(align) =>
+              val before = align == graft.core.Align.Before
+              var i = 0
+              while (i < es.length) {
+                var j = i
+                var triggers = 0
+                while (j < es.length && es(j).ts == es(i).ts) {
+                  if (es(j).gate) triggers += 1
+                  j += 1
+                }
+                if (before && triggers > 0) b.close(b.id + triggers)
+                while (i < j) { b.add(es(i).v); i += 1 }
+                if (!before && triggers > 0) b.close(b.id + triggers)
+              }
+            case Sessions =>
+              es.foreach { e =>
+                if (e.gate) {
+                  if (!b.open) { b.open = true; b.id += 1 }
+                  b.add(e.v)
+                } else if (b.open) { b.close(b.id); b.open = false }
+              }
           }
-          state.update(s)
-          out.result().iterator
+          state.update(b.state)
+          b.out.iterator
       }
   }
+
+  private val ByTsSeq: java.util.Comparator[SliceEvent] = (x, y) => {
+    val c = java.lang.Long.compare(x.ts, y.ts)
+    if (c != 0) c else java.lang.Long.compare(x.seq, y.seq)
+  }
+
+  /** The open bucket of one key while its group folds. */
+  private final class Bucket(key: String, s: SliceState) {
+    var id: Long = s.windowId
+    var n: Long = s.n
+    var sum: Double = s.sum
+    var mn: Double = s.mn
+    var mx: Double = s.mx
+    var open: Boolean = s.open
+    val out = scala.collection.mutable.ArrayBuffer.empty[CountBucket]
+
+    def add(v: Double): Unit = {
+      n += 1; sum += v; mn = math.min(mn, v); mx = math.max(mx, v)
+    }
+
+    /** Emit the bucket if it holds rows, then start bucket `next`. */
+    def close(next: Long): Unit = {
+      if (n > 0) out += CountBucket(key, id, n, sum, mn, mx)
+      id = next; n = 0L; sum = 0.0; mn = Double.MaxValue; mx = Double.MinValue
+    }
+
+    def state: SliceState = SliceState(id, n, sum, mn, mx, open)
+  }
 }
+
+/** Count-based slicing on a live stream (scespet `Events(n)` /
+  * `group(3.events).reduce`, SliceTriggerSpec.scala:53-56): no Spark
+  * built-in exists, so it is the [[SliceFold]] under the `Count` rule.
+  * Batch twin: `WindowKernel.withWindowId(Slice.Count(n))`.
+  */
+object CountSlices {
+  def apply(events: Dataset[KeyedEvent], n: Int): Dataset[CountBucket] =
+    SliceFold(events, SliceFold.Count(n))
+}
+
+/** Trigger-stream slicing on a live stream (scespet's stream-as-trigger
+  * slices, SliceTriggerSpec.scala:57-73): an event whose gate is set
+  * closes the bucket. `Align.After` (the default): the triggering cycle
+  * JOINS the closing bucket (end-inclusive, SliceAfterBucket.scala:13-16);
+  * `before = true` gives end-exclusive (the cycle opens the new bucket).
+  * Batch twin: `WindowKernel.withWindowId(Slice.TriggerCol(…))`.
+  */
+object TriggerSlices {
+
+  def apply(
+      events: Dataset[KeyedEvent],
+      isTrigger: KeyedEvent => Boolean,
+      before: Boolean = false): Dataset[CountBucket] = {
+    import events.sparkSession.implicits._
+    tagged(events.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, isTrigger(e))), before)
+  }
+
+  /** Column-tagged variant: the trigger predicate is evaluated in the
+    * PLAN (any Column over the source row lands in `gate`), so the
+    * trigger can reference columns the typed event doesn't carry.
+    */
+  def tagged(
+      events: Dataset[GatedEvent],
+      before: Boolean = false): Dataset[CountBucket] =
+    SliceFold(events, SliceFold.Trigger(
+      if (before) graft.core.Align.Before else graft.core.Align.After))
+}
+
+/** Boolean-gated windows on a live stream (scespet `window(stream[Boolean])`,
+  * MacroTerm.scala:242-259): a bucket opens on a false→true gate edge and
+  * closes on true→false; the closing (gate=false) event is EXCLUDED
+  * (close precedence, WindowedReduce.scala:55-58). Batch twin:
+  * `WindowKernel.withSessions`.
+  */
+object GatedWindows {
+  def apply(events: Dataset[GatedEvent]): Dataset[CountBucket] =
+    SliceFold(events, SliceFold.Sessions)
+}
+
 
 /** Per-event EWMA emission (scespet's CUMULATIVE emit mode for the
   * order-dependent EWMA cell, ReduceFuncs.scala:33-47) on a live stream —
@@ -240,100 +378,6 @@ object EwmaScan {
         explode(arrays_zip(col("ts"), col("seq"), col("ewma"))).as("r"))
       .select(col("k"), col("r.ts").as("ts"), col("r.seq").as("seq"),
         col("r.ewma").as("ewma"))
-}
-
-/** Trigger-stream slicing on a live stream (scespet's stream-as-trigger
-  * slices, SliceTriggerSpec.scala:57-73): per-key state folds events in
-  * order; an event matching the trigger closes the bucket. `Align.After`
-  * semantics: the triggering event JOINS the closing bucket (end-
-  * inclusive, SliceAfterBucket.scala:13-16); `before = true` gives
-  * end-exclusive (the trigger event opens the new bucket). Batch twin:
-  * `WindowKernel.withWindowId(Slice.TriggerCol(…))`.
-  */
-object TriggerSlices {
-
-  def apply(
-      events: Dataset[KeyedEvent],
-      isTrigger: KeyedEvent => Boolean,
-      before: Boolean = false): Dataset[CountBucket] = {
-    import events.sparkSession.implicits._
-    tagged(events.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, isTrigger(e))), before)
-  }
-
-  /** Column-tagged variant: the trigger predicate is evaluated in the
-    * PLAN (any Column over the source row lands in `gate`), so the
-    * trigger can reference columns the typed event doesn't carry.
-    */
-  def tagged(
-      events: Dataset[GatedEvent],
-      before: Boolean = false): Dataset[CountBucket] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CountSliceState, CountBucket](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[GatedEvent], state: GroupState[CountSliceState]) =>
-          var s = state.getOption.getOrElse(
-            CountSliceState(0L, 0L, 0.0, Double.MaxValue, Double.MinValue))
-          val out = Seq.newBuilder[CountBucket]
-          def close(): Unit = {
-            if (s.n > 0) out += CountBucket(key, s.windowId, s.n, s.sum, s.mn, s.mx)
-            s = CountSliceState(s.windowId + 1, 0L, 0.0, Double.MaxValue, Double.MinValue)
-          }
-          def add(e: GatedEvent): Unit =
-            s = CountSliceState(s.windowId, s.n + 1, s.sum + e.v,
-              math.min(s.mn, e.v), math.max(s.mx, e.v))
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            if (e.gate) {
-              if (before) { close(); add(e) } else { add(e); close() }
-            } else add(e)
-          }
-          state.update(s)
-          out.result().iterator
-      }
-  }
-}
-
-/** Boolean-gated windows on a live stream (scespet `window(stream[Boolean])`,
-  * MacroTerm.scala:242-259): a bucket opens on a false→true gate edge and
-  * closes on true→false; the closing (gate=false) event is EXCLUDED
-  * (close precedence, WindowedReduce.scala:55-58). Batch twin:
-  * `WindowKernel.withSessions`.
-  */
-final case class GatedEvent(k: String, ts: Long, seq: Long, v: Double, gate: Boolean)
-private final case class GateState(
-    open: Boolean, sessionId: Long, n: Long, sum: Double, mn: Double, mx: Double)
-
-object GatedWindows {
-
-  def apply(events: Dataset[GatedEvent]): Dataset[CountBucket] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[GateState, CountBucket](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[GatedEvent], state: GroupState[GateState]) =>
-          var s = state.getOption.getOrElse(
-            GateState(open = false, 0L, 0L, 0.0, Double.MaxValue, Double.MinValue))
-          val out = Seq.newBuilder[CountBucket]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            (s.open, e.gate) match {
-              case (false, true) => // open edge: session starts WITH this event
-                s = GateState(open = true, s.sessionId + 1, 1L, e.v, e.v, e.v)
-              case (true, true) =>
-                s = s.copy(n = s.n + 1, sum = s.sum + e.v,
-                  mn = math.min(s.mn, e.v), mx = math.max(s.mx, e.v))
-              case (true, false) => // close edge excludes its event
-                out += CountBucket(key, s.sessionId, s.n, s.sum, s.mn, s.mx)
-                s = s.copy(open = false, n = 0L, sum = 0.0,
-                  mn = Double.MaxValue, mx = Double.MinValue)
-              case (false, false) => ()
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
-  }
 }
 
 /** Streaming either-fires zip join (scespet `join`, MacroTerm.scala:190-204):

@@ -7,15 +7,22 @@ import java.nio.file.{Files, Paths}
   * plan evidence under $SPARK_GRAFT_PLANS_DIR (default plans/r16).
   *
   *   sbt "runMain graft.tools.PlanDump before graph_pagerank knn_ivfpq"
+  *   sbt "runMain graft.tools.PlanDump flagship"
   *
-  * Writes <dir>/<query>_<tag>.txt for each name. Uses the same session
-  * shape as Bench so plans match what the bench executes.
+  * Writes <dir>/<query>_<tag>.txt for each name; with no names it dumps
+  * the flagship queries SCALE.md quotes. Uses the same session shape as
+  * Bench so plans match what the bench executes.
   */
 object PlanDump {
+
+  val Flagship = Seq("q6_forecast", "q5_nation_revenue", "ev_slice_time",
+    "ev_fold_all", "ev_asof_take", "dedup_minhash_lsh", "knn_lsh",
+    "li_interval_days")
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <tag> <query...>")
+    require(args.nonEmpty, "usage: PlanDump <tag> [query...]")
     val tag = args.head
-    val names = args.tail
+    val names = if (args.length > 1) args.tail.toSeq else Flagship
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -43,6 +50,7 @@ object PlanDump {
             case e: Throwable =>
               println(s"$name: FAILED ${e.getClass.getSimpleName}: ${e.getMessage}")
           }
+          spark.catalog.clearCache()
       }
     }
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{Q, StreamFixtures, StreamHarness}
 
@@ -54,7 +54,6 @@ object StreamAmortize {
       builder.config("spark.sql.streaming.checkpointLocation", s"$d/ckpt"))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val results = Seq(
       "stream_ingest_floor" -> measureFloor(spark, sfDir, k),
@@ -104,19 +103,35 @@ object StreamAmortize {
     root
   }
 
-  /** Feed drop i and block until the stream has fully processed it;
-    * returns the wall. The FIRST call is made with the query already
-    * started on an empty source — its wall carries the fixed per-JOB
-    * term (initial plan/codegen/state-store open) plus one drop's work.
+  /** Start `build` over an empty scratch source, then feed the K drops
+    * under `root` one at a time and block until the stream has fully
+    * processed each; returns the walls. The FIRST drop's wall carries the
+    * fixed per-JOB term (initial plan/codegen/state-store open) plus one
+    * drop's work. Deletes the source and the drops afterwards.
     */
-  private def timedDrops(root: String, srcDir: String, k: Int,
-      sq: org.apache.spark.sql.streaming.StreamingQuery): Seq[Double] =
-    (1 to k).map { i =>
-      val t0 = System.nanoTime()
-      StreamFixtures.feed(root, s"d$i", srcDir)
-      sq.processAllAvailable()
-      (System.nanoTime() - t0) / 1e9
+  private def timedDrops(s: SparkSession, root: String, k: Int)(
+      build: DataFrame => Dataset[_]): Seq[Double] = {
+    val srcDir = StreamFixtures.scratchDir("graft_amz_src_")
+    try StreamHarness.withSplitPerFile(s) {
+      val src = s.readStream.schema(s.read.parquet(s"$root/d1").schema).parquet(srcDir)
+      val sq = build(src).writeStream.queryName("amz_" + System.nanoTime())
+        .format("memory").outputMode("append").start()
+      try (1 to k).map { i =>
+        val t0 = System.nanoTime()
+        StreamFixtures.feed(root, s"d$i", srcDir)
+        sq.processAllAvailable()
+        (System.nanoTime() - t0) / 1e9
+      } finally sq.stop()
+    } finally {
+      StreamFixtures.deleteRecursively(srcDir)
+      StreamFixtures.deleteRecursively(root)
     }
+  }
+
+  /** K time-ordered drops of the events (epoch-µs `ts`), keyed by user. */
+  private def eventDrops(s: SparkSession, dir: String, k: Int): String =
+    writeDrops(graft.core.Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("value"), col("ts")), "ts", "user_id", k)
 
   /** The per-BATCH machinery floor: the same event drops through a
     * stateless passthrough (read every row, emit every row — the
@@ -128,26 +143,8 @@ object StreamAmortize {
     */
   private def measureFloor(s: SparkSession, dir: String, k: Int): Seq[Double] =
     StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
-      val ev = graft.core.Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("value"),
-          graft.core.Tables.tsUsExpr(
-            s.read.parquet(s"$dir/events.parquet").schema).as("tsu"))
-      val root = writeDrops(ev, "tsu", "user_id", k)
-      val srcDir = StreamFixtures.scratchDir("graft_amz_fl_src_")
-      try {
-        val schema = s.read.parquet(s"$root/d1").schema
-        StreamHarness.withSplitPerFile(s) {
-          val src = s.readStream.schema(schema).parquet(srcDir)
-            .select(col("event_id"), col("user_id"), col("value"))
-          val name = "amz_fl_" + System.nanoTime()
-          val sq = src.writeStream.queryName(name).format("memory")
-            .outputMode("append").start()
-          try timedDrops(root, srcDir, k, sq) finally sq.stop()
-        }
-      } finally {
-        StreamFixtures.deleteRecursively(srcDir)
-        StreamFixtures.deleteRecursively(root)
-      }
+      timedDrops(s, eventDrops(s, dir, k), k)(
+        _.select(col("event_id"), col("user_id"), col("value")))
     }
 
   private def measureSession(s: SparkSession, dir: String, k: Int): Seq[Double] =
@@ -155,32 +152,13 @@ object StreamAmortize {
       s.conf.set(
         "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
         "true")
-      val ev = graft.core.Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("value"),
-          graft.core.Tables.tsUsExpr(
-            s.read.parquet(s"$dir/events.parquet").schema).as("tsu"))
-      val root = writeDrops(ev, "tsu", "user_id", k)
-      val srcDir = StreamFixtures.scratchDir("graft_amz_sw_src_")
-      try {
-        val schema = s.read.parquet(s"$root/d1").schema
-        StreamHarness.withSplitPerFile(s) {
-          val src = s.readStream.schema(schema).parquet(srcDir)
-            .withColumn("event_time", timestamp_micros(col("tsu")))
-            .withWatermark("event_time", "0 seconds")
-          val agg = src
-            .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
-            .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
-          val name = "amz_sw_" + System.nanoTime()
-          val sq = agg.writeStream.queryName(name).format("memory")
-            .outputMode("append").start()
-          try timedDrops(root, srcDir, k, sq) finally sq.stop()
-        }
-      } finally {
-        s.conf.unset(
-          "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
-        StreamFixtures.deleteRecursively(srcDir)
-        StreamFixtures.deleteRecursively(root)
-      }
+      try timedDrops(s, eventDrops(s, dir, k), k) { src =>
+        src.withColumn("event_time", timestamp_micros(col("ts")))
+          .withWatermark("event_time", "0 seconds")
+          .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
+          .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
+      } finally s.conf.unset(
+        "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
     }
 
   private def measureScd2(s: SparkSession, dir: String, k: Int): Seq[Double] =
@@ -191,51 +169,17 @@ object StreamAmortize {
           unix_micros(col("o_orderdate").cast("timestamp")).as("ts"),
           col("o_orderkey").as("seq"),
           col("o_orderpriority").as("value"))
-      val root = writeDrops(ord, "ts", "k", k)
-      val srcDir = StreamFixtures.scratchDir("graft_amz_scd_src_")
-      try {
-        val schema = s.read.parquet(s"$root/d1").schema
-        StreamHarness.withSplitPerFile(s) {
-          val src = s.readStream.schema(schema).parquet(srcDir)
-            .as[graft.streaming.ScdEvent]
-          val name = "amz_scd_" + System.nanoTime()
-          val sq = graft.streaming.ScdCompact(src)
-            .writeStream.queryName(name).format("memory")
-            .outputMode("append").start()
-          try timedDrops(root, srcDir, k, sq) finally sq.stop()
-        }
-      } finally {
-        StreamFixtures.deleteRecursively(srcDir)
-        StreamFixtures.deleteRecursively(root)
-      }
+      timedDrops(s, writeDrops(ord, "ts", "k", k), k)(
+        src => graft.streaming.ScdCompact(src.as[graft.streaming.ScdEvent]))
     }
 
   private def measureSliding(s: SparkSession, dir: String, k: Int): Seq[Double] =
     StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-      val ev = graft.core.Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("value"),
-          graft.core.Tables.tsUsExpr(
-            s.read.parquet(s"$dir/events.parquet").schema).as("ts"))
-      val root = writeDrops(ev, "ts", "user_id", k)
-      val srcDir = StreamFixtures.scratchDir("graft_amz_sl_src_")
-      try {
-        val schema = s.read.parquet(s"$root/d1").schema
-        StreamHarness.withSplitPerFile(s) {
-          val src = s.readStream.schema(schema).parquet(srcDir)
-          // the state pass is the deployment-marginal cost; the
-          // post-sink hop composition is a slice-sized batch job the
-          // catalog entry measures separately
-          val agg = graft.streaming.SlicedHopping.slices(
-            src, Seq("user_id"), "1 hour", "0 seconds",
-            "n" -> count(lit(1)), "sv" -> Q.dsum(col("value")))
-          val name = "amz_sl_" + System.nanoTime()
-          val sq = agg.writeStream.queryName(name).format("memory")
-            .outputMode("append").start()
-          try timedDrops(root, srcDir, k, sq) finally sq.stop()
-        }
-      } finally {
-        StreamFixtures.deleteRecursively(srcDir)
-        StreamFixtures.deleteRecursively(root)
-      }
+      // the state pass is the deployment-marginal cost; the post-sink hop
+      // composition is a slice-sized batch job the catalog entry measures
+      // separately
+      timedDrops(s, eventDrops(s, dir, k), k)(
+        graft.streaming.SlicedHopping.slices(_, Seq("user_id"), "1 hour", "0 seconds",
+          "n" -> count(lit(1)), "sv" -> Q.dsum(col("value"))))
     }
 }

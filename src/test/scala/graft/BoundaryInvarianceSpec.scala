@@ -70,6 +70,10 @@ class BoundaryInvarianceSpec extends SparkSpec {
       i.toLong, rnd.nextInt(100).toDouble)
   }.sortBy(e => (e.ts, e.seq))
 
+  // the keyed feed with a trigger/window gate on about a third of the rows
+  private val gated: Seq[GatedEvent] =
+    keyed.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, e.v % 3 == 0))
+
   private val zips: Seq[ZipEvent] = (0 until 200).map { i =>
     ZipEvent("z" + rnd.nextInt(4), rnd.nextInt(400).toLong * 1000L + i,
       i.toLong, rnd.nextInt(2), rnd.nextInt(50).toDouble)
@@ -101,7 +105,7 @@ class BoundaryInvarianceSpec extends SparkSpec {
     PackItem(i % 4, i.toLong, 10 + rnd.nextInt(90))
   }
 
-  // the ten laws ----------------------------------------------------------
+  // the laws ---------------------------------------------------------------
 
   law[KeyedEvent]("tumblingAgg", keyed,
     ds => Streams.tumblingAgg(ds.toDF(), Seq("k"), "10 seconds", "0 seconds",
@@ -111,6 +115,14 @@ class BoundaryInvarianceSpec extends SparkSpec {
 
   law[KeyedEvent]("CountSlices", keyed, ds => CountSlices(ds, 7),
     Seq("k", "windowId"))
+
+  law[GatedEvent]("TriggerSlices.tagged AFTER", gated, ds => TriggerSlices.tagged(ds),
+    Seq("k", "windowId"))
+
+  law[GatedEvent]("TriggerSlices.tagged BEFORE", gated,
+    ds => TriggerSlices.tagged(ds, before = true), Seq("k", "windowId"))
+
+  law[GatedEvent]("GatedWindows", gated, ds => GatedWindows(ds), Seq("k", "windowId"))
 
   law[KeyedEvent]("CohortTracker", keyed, ds => CohortTracker(ds, 50000000L),
     Seq("k", "offsetW"))

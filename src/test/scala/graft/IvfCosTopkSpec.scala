@@ -149,4 +149,14 @@ class IvfCosTopkSpec extends SparkSpec {
     a shouldBe b
     a.nonEmpty shouldBe true
   }
+
+  test("empty embedding frame: no seeds gives an empty result, not an AIOOBE") {
+    // an empty frame, and a corpus with no seed ids (vec_id < k)
+    for (e <- Seq(corpus(3).limit(0), corpus(3).filter(col("vec_id") >= K))) {
+      val got = IvfCosTopk.topk(e, K, 3, 5, lloyd = true)
+      got.columns.toSeq shouldBe Seq("q_id", "rk", "vec_id", "cos")
+      rowsOf(got) shouldBe empty
+      spark.catalog.clearCache()
+    }
+  }
 }

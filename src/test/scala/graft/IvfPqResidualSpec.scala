@@ -231,4 +231,14 @@ class IvfPqResidualSpec extends SparkSpec {
     a shouldBe b
     a.nonEmpty shouldBe true
   }
+
+  test("empty embedding frame: no seeds gives an empty result, not an AIOOBE") {
+    // an empty frame, and a corpus with no seed ids (vec_id < k)
+    for (e <- Seq(corpus(3).limit(0), corpus(3).filter(col("vec_id") >= K))) {
+      val got = IvfPqResidual.topk(e, M, SUB, K, NPROBE, 3, 5)
+      got.columns.toSeq shouldBe Seq("q_id", "rk", "vec_id", "score_q")
+      rowsOf(got) shouldBe empty
+      spark.catalog.clearCache()
+    }
+  }
 }

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.core._
+import graft.streaming.{CountBucket, CountSlices, GatedEvent, GatedWindows, KeyedEvent,
+  TriggerSlices}
 
 /** ScalaCheck-generated invariants for the window-id kernel (SURVEY §5
   * plan: "ScalaCheck for slice-alignment invariants"). Golden tests pin
@@ -14,7 +18,10 @@ import graft.core._
   *     and per-window sums re-add to the stream total;
   *  2. count law — Count(n) windows have exactly n rows except the last;
   *  3. alignment law — BEFORE/AFTER window ids differ ONLY on trigger rows
-  *     (the trigger row opens the new bucket under BEFORE).
+  *     (the trigger row opens the new bucket under BEFORE);
+  *  4. batch/stream parity — the streaming slice fold's buckets equal the
+  *     batch kernel's CLOSED buckets, on keyed streams with `ts` ties fed
+  *     in micro-batches cut at cycle boundaries.
   */
 class SlicePropertySpec extends SparkSpec {
   import spark.implicits._
@@ -152,4 +159,101 @@ class SlicePropertySpec extends SparkSpec {
       }
     }
   }
+
+  // ---- 4. batch/stream parity --------------------------------------------
+
+  /** One bucket as (key, id, n, sum, min, max). */
+  private type B = (String, Long, Long, Double, Double, Double)
+
+  /** Rows sharing one ts form one cycle; AFTER must keep the cycle in the
+    * closing bucket and BEFORE must open the new bucket with all of it. */
+  private val tieExample: Seq[GatedEvent] = Seq(
+    GatedEvent("a", 5, 1, 1.0, gate = true), GatedEvent("a", 5, 2, 2.0, gate = false),
+    GatedEvent("a", 7, 3, 3.0, gate = false), GatedEvent("a", 7, 4, 4.0, gate = true),
+    GatedEvent("a", 9, 5, 5.0, gate = true), GatedEvent("a", 9, 6, 6.0, gate = true))
+
+  /** Three keys over twelve timestamps: most rows share their (key, ts). */
+  private def tiedStream(seed: Long): Seq[GatedEvent] = {
+    val r = new scala.util.Random(seed)
+    (0 until 30 + r.nextInt(30)).map { i =>
+      GatedEvent("k" + r.nextInt(3), r.nextInt(12).toLong, i.toLong,
+        r.nextInt(20).toDouble, r.nextInt(3) == 0)
+    }.sortBy(e => (e.ts, e.seq))
+  }
+
+  private val parityCases: Seq[Seq[GatedEvent]] = tieExample +: (1L to 5L).map(tiedStream)
+
+  /** 1–3 micro-batches, cut only where `ts` changes. */
+  private def cycleBatches(es: Seq[GatedEvent], seed: Long): Seq[Seq[GatedEvent]] = {
+    val r = new scala.util.Random(seed)
+    val cuts = r.shuffle((1 until es.length).filter(i => es(i).ts != es(i - 1).ts))
+      .take(r.nextInt(3)).sorted
+    (0 +: cuts :+ es.length).sliding(2).map { case Seq(a, b) => es.slice(a, b) }.toSeq
+  }
+
+  private def streamed(batches: Seq[Seq[GatedEvent]],
+      fold: Dataset[GatedEvent] => Dataset[CountBucket]): Set[B] = {
+    val mem = MemoryStream[GatedEvent](spark)
+    val name = "slice_parity_" + System.nanoTime()
+    val q = fold(mem.toDS()).writeStream.queryName(name).format("memory")
+      .outputMode("append").start()
+    try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name).as[CountBucket].collect()
+      .map(b => (b.k, b.windowId, b.n, b.sum, b.mn, b.mx)).toSet
+  }
+
+  /** Batch buckets from rows annotated (key, id, v, gate), keeping those
+    * `closed` says are closed given all rows of their key. */
+  private def batchBuckets(rows: Seq[(String, Long, Double, Boolean)])(
+      closed: (Seq[(String, Long, Double, Boolean)], Seq[(String, Long, Double, Boolean)]) => Boolean): Set[B] =
+    rows.groupBy(_._1).toSeq.flatMap { case (k, keyRows) =>
+      keyRows.groupBy(_._2).toSeq.collect {
+        case (id, bucket) if closed(bucket, keyRows) =>
+          val vs = bucket.map(_._3)
+          (k, id, vs.size.toLong, vs.sum, vs.min, vs.max)
+      }
+    }.toSet
+
+  private def windowIds(es: Seq[GatedEvent], slice: Slice) =
+    WindowKernel.withWindowId(es.toDF(), Seq("k"), slice)
+      .select(col("k"), col(WindowKernel.WindowId), col("v"), col("gate"))
+      .as[(String, Long, Double, Boolean)].collect().toSeq
+
+  private def parity(label: String)(fold: Dataset[GatedEvent] => Dataset[CountBucket],
+      batch: Seq[GatedEvent] => Set[B]): Unit =
+    test(s"batch/stream parity: $label — the stream fold's buckets equal the " +
+      "batch kernel's closed buckets (ts ties, 1-3 micro-batches cut at cycles)") {
+      parityCases.zipWithIndex.foreach { case (es, i) =>
+        val batches = cycleBatches(es, i.toLong)
+        withClue(s"case $i, batch sizes ${batches.map(_.size)}, events $es: ") {
+          streamed(batches, fold) shouldBe batch(es)
+        }
+      }
+    }
+
+  parity("Count(3)")(
+    ds => CountSlices(ds.map(e => KeyedEvent(e.k, e.ts, e.seq, e.v)), 3),
+    es => batchBuckets(windowIds(es, Slice.Count(3)))((b, _) => b.size == 3))
+
+  parity("TriggerCol AFTER")(
+    ds => TriggerSlices.tagged(ds),
+    es => batchBuckets(windowIds(es, Slice.TriggerCol(col("gate"), Align.After)))(
+      (b, _) => b.exists(_._4)))
+
+  parity("TriggerCol BEFORE")(
+    ds => TriggerSlices.tagged(ds, before = true),
+    es => batchBuckets(windowIds(es, Slice.TriggerCol(col("gate"), Align.Before)))(
+      (b, key) => b.head._2 < key.map(_._2).max))
+
+  parity("withSessions gate")(
+    ds => GatedWindows(ds),
+    es => {
+      val rows = WindowKernel.withSessions(es.toDF(), Seq("k"), col("gate"))
+        .select(col("k"), col("session_id"), col("v"), col("in_window"))
+        .as[(String, Long, Double, Boolean)].collect().toSeq
+      // a session is closed once a gate=false row carries its id
+      batchBuckets(rows.filter(_._4))((b, _) =>
+        rows.exists(r => r._1 == b.head._1 && r._2 == b.head._2 && !r._4))
+    })
 }
